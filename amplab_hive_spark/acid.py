@@ -79,6 +79,7 @@ from amplab_hive_spark.ddl import (
     _resolve_targets,
     _table_location,
 )
+from amplab_hive_spark.session import local_result
 
 _DELTA_DIR = "_delete_delta"
 _MANIFEST = "_keys.json"
@@ -878,8 +879,8 @@ def show_compactions(spark: SparkSession) -> DataFrame:
             t.database or db, t.name, None, ctype, state,
             len(txns), len(entries), live_bytes,
         ))
-    return spark.createDataFrame(
-        rows,
+    return local_result(
+        spark, rows,
         "database string, table string, partition string, type string, "
         "state string, delta_txns int, delta_files int, delta_bytes bigint",
     )
@@ -901,8 +902,8 @@ def show_transactions(spark: SparkSession) -> DataFrame:
     same way SHOW LOCKS's minimal row did — SHOW COMPACTIONS already
     reports the pending inline-compaction work the queue side would
     show)."""
-    return spark.createDataFrame(
-        [], "txnid bigint, state string, user string, hostname string"
+    return local_result(
+        spark, [], "txnid bigint, state string, user string, hostname string"
     )
 
 
@@ -977,7 +978,7 @@ def show_locks(
     else:
         # raise the reference's resolution error if the table is absent
         spark.table(_qualify(spark, table))
-    return spark.createDataFrame(rows, schema)
+    return local_result(spark, rows, schema)
 
 
 def compact_mor(spark: SparkSession, name: str, mode: str = "major") -> int:
@@ -1541,6 +1542,8 @@ def auto_publish_mor_views(spark: SparkSession) -> list[str]:
     USER temp view is left alone — an auto pass must not turn a
     server start into an error over an unrelated name. Returns the
     names actually published (idempotent)."""
+    import pyarrow.parquet as pq
+
     out = []
     for bare in sorted(_known_mor_names(spark)):
         try:
@@ -1556,13 +1559,12 @@ def auto_publish_mor_views(spark: SparkSession) -> list[str]:
             # EXPLICIT schema (_delta_read), so read_mor no longer
             # touches file footers at plan time and a corrupt delta
             # would surface at first QUERY, not here. An auto pass
-            # must still skip such a table (r10 p3 contract), so force
-            # the footer read the old implicit inference used to do —
-            # once per server start, never on the hot write/read path.
-            probe_paths = [p for _, _, p in
-                           _scan_deltas(_delta_path(spark, bare))]
-            if probe_paths:
-                spark.read.parquet(*probe_paths).schema
+            # must still skip such a table (r10 p3 contract), so read
+            # EVERY live delta file's footer (a Spark schema read picks
+            # one) — job-free, once per server start.
+            for _, _, p in _scan_deltas(_delta_path(spark, bare)):
+                for f in pq.ParquetDataset(p).files:
+                    pq.read_metadata(f)
             # same qualified-value rule as publish_mor_views: the bare
             # name just resolved (mor_keys above) in the CURRENT db
             _PUBLISHED.setdefault(bare, _qualify(spark, bare))

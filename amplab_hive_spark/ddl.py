@@ -32,6 +32,8 @@ from collections.abc import Callable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 
+from amplab_hive_spark.session import local_result
+
 
 def create_table_as(
     spark: SparkSession,
@@ -114,15 +116,18 @@ def _partition_columns(spark: SparkSession, name: str) -> list[str]:
     statement — pure scheduling latency for metadata the catalog
     already holds. The py4j metadata read resolves the name exactly
     like listColumns (current database for bare names, db.table for
-    qualified); anything it cannot resolve (temp views, 3-part
-    names) falls back to the original API."""
+    qualified); a temp view shadowing the name, 3-part names and
+    parse edges fall back to the original API."""
+    state = spark._jsparkSession.sessionState()
     try:
-        ident = spark._jsparkSession.sessionState().sqlParser().parseTableIdentifier(name)
-        meta = spark._jsparkSession.sessionState().catalog().getTableMetadata(ident)
-        joined = meta.partitionColumnNames().mkString("\x00")
-        return joined.split("\x00") if joined else []
-    except Exception:  # temp view / 3-part name / parse edge: old path
-        return [c.name for c in spark.catalog.listColumns(name) if c.isPartition]
+        ident = state.sqlParser().parseTableIdentifier(name)
+        catalog = state.catalog()
+        if not catalog.isTempView(ident):
+            joined = catalog.getTableMetadata(ident).partitionColumnNames().mkString("\x00")
+            return joined.split("\x00") if joined else []
+    except Exception:  # noqa: BLE001 — 3-part name / parse edge
+        pass
+    return [c.name for c in spark.catalog.listColumns(name) if c.isPartition]
 
 
 # UPDATE/DELETE evaluate their condition in two separate scans
@@ -247,7 +252,8 @@ def _partition_membership(df, pcols, parts):
 
     # explicit schema from the table's own partition columns —
     # inference would fail on a column that is None in every tuple
-    # (the null-partition case eqNullSafe exists to support)
+    # (the null-partition case eqNullSafe exists to support). Not
+    # local_result: only the row path round-trips naive timestamps.
     tuple_schema = StructType([df.schema[c] for c in pcols])
     tuples = spark.createDataFrame([tuple(p) for p in parts], schema=tuple_schema)
     cond = reduce(
@@ -1066,8 +1072,7 @@ def partition_values(spark: SparkSession, name: str) -> DataFrame:
             v = unquote(v)
             vals[k] = None if v == "__HIVE_DEFAULT_PARTITION__" else v
         rows.append(tuple(vals.get(c) for c in pcols))
-    schema_str = ", ".join(f"{c} string" for c in pcols)
-    raw = spark.createDataFrame(rows or [], schema=schema_str)
+    raw = local_result(spark, rows, ", ".join(f"{c} string" for c in pcols))
     target_types = dict(spark.table(name).select(*pcols).dtypes)
     return raw.select(*[F.col(c).cast(target_types[c]).alias(c) for c in pcols])
 

@@ -94,7 +94,6 @@ def run_dfs(spark: SparkSession, args_text: str) -> DataFrame:
         raise DfsError(
             f"Command failed with exit code = {rc}"
             + (f"\n{tail}" if tail else ""), rc)
-    from pyspark.sql.types import StringType, StructField, StructType
+    from amplab_hive_spark.session import local_result
 
-    schema = StructType([StructField(DFS_RESULT_HEADER, StringType())])
-    return spark.createDataFrame(lines, schema)
+    return local_result(spark, lines, f"`{DFS_RESULT_HEADER}` string")

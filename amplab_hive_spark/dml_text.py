@@ -67,6 +67,8 @@ import re
 
 from pyspark.sql import DataFrame, SparkSession
 
+from amplab_hive_spark.session import local_result
+
 
 def _is_word_at(s: str, i: int, word: str) -> bool:
     n = len(word)
@@ -381,7 +383,7 @@ def handle(spark: SparkSession, text: str) -> DataFrame | None:
 
         enforce_maintenance(spark, m.group(1))
         n = _compact_mor(spark, m.group(1), mode=mode)
-        return spark.createDataFrame([(n,)], "compacted_deltas bigint")
+        return local_result(spark, [(n,)], "compacted_deltas bigint")
 
     m = _UPDATE_HEAD.match(text)
     if m:
@@ -393,7 +395,7 @@ def handle(spark: SparkSession, text: str) -> DataFrame | None:
         else:
             n = update_table(spark, m.group(1), cond or "true",
                              _assignments(set_text))
-        return spark.createDataFrame([(n,)], "updated bigint")
+        return local_result(spark, [(n,)], "updated bigint")
 
     m = _DELETE_HEAD.match(text)
     if m:
@@ -405,7 +407,7 @@ def handle(spark: SparkSession, text: str) -> DataFrame | None:
             n = _delete_mor(spark, m.group(1), cond or "true", keys)
         else:
             n = delete_from(spark, m.group(1), cond or "true")
-        return spark.createDataFrame([(n,)], "deleted bigint")
+        return local_result(spark, [(n,)], "deleted bigint")
 
     if not re.match(r"^\s*MERGE\b", text, re.I):
         return None
@@ -576,7 +578,8 @@ def handle(spark: SparkSession, text: str) -> DataFrame | None:
         not_matched_insert=not_matched_insert,
         not_matched_cond=insert_guard,
     )
-    return spark.createDataFrame(
+    return local_result(
+        spark,
         [(stats["updated"], stats["deleted"], stats["inserted"])],
         "updated bigint, deleted bigint, inserted bigint",
     )

@@ -112,7 +112,10 @@ class _Cursor:
     side, never the full result). ``touched`` (monotonic) drives the
     idle sweep; ``close()`` releases the iterator eagerly — dropping
     the last reference closes the local-iterator socket, which is
-    what makes the JVM side stop serving the result's jobs."""
+    what makes the JVM side stop serving the result's jobs. A local
+    result (``df.isLocal()``: session.local_result rows, command
+    output) that fits one page is served whole from the job-free
+    ``take`` probe and never opens a cursor."""
 
     def __init__(self, columns: list[str], it: Iterator, stmt_id: str):
         import time

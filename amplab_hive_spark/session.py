@@ -12,7 +12,8 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 # Defaults match the driver harness: local[32], 32 shuffle partitions.
 _DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
@@ -173,3 +174,32 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def local_result(
+    spark: SparkSession, rows: list, schema: "StructType | str"
+) -> DataFrame:
+    """A small driver-side result (SET echoes, DML counts, SHOW
+    listings, dfs output) as a JVM ``LocalRelation`` — the engine's
+    FetchTask (ql/exec/FetchOperator.java answers without a job). A
+    Python list slices into Python worker tasks, so even a one-row
+    count ran Spark jobs; a ``pyarrow.Table`` under
+    ``arrow.localRelationThreshold`` stays in driver memory: ``isLocal()``
+    is true, ``collect()`` runs no job. Flat column types only.
+
+    Left on the row path on purpose: the ``sources/{avro,rcfile,
+    seqfile}.py`` split spans (a Python reader needs a worker anyway);
+    ``streaming/ingest.py`` (user batches of any size, inferred
+    schema); the job-free ``spark.range(0)`` empty results; and
+    ``ddl._partition_membership`` (naive timestamps)."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    arrow = to_arrow_schema(schema)
+    cols = list(zip(*rows)) or [()] * len(arrow)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow)], schema=arrow
+    )
+    return spark.createDataFrame(table, schema)

@@ -35,7 +35,9 @@ Protocol subset (everything beeline's -e path uses): OpenSession,
 ExecuteStatement (sync execution; async callers see FINISHED/ERROR
 at the first GetOperationStatus), GetOperationStatus,
 GetResultSetMetadata, FetchResults (FETCH_NEXT paging over
-toLocalIterator; fetchType=1 log requests answered empty),
+toLocalIterator, except a local result — ``df.isLocal()``: rows
+already in driver memory — served from a job-free collect();
+fetchType=1 log requests answered empty),
 CancelOperation, CloseOperation, CloseSession, GetInfo — plus the
 JDBC METADATA operations (DatabaseMetaData / beeline ``!tables``,
 ``!columns``; the reference's Get*Operation.java family):
@@ -402,25 +404,22 @@ class _Operation:
     def __init__(self, df=None, columns=None, rows=None,
                  secret: bytes = b"", running: bool = False) -> None:
         """A DataFrame-backed statement result (rows paged via
-        toLocalIterator), a STATIC metadata result (columns +
-        materialized row list — the Get* operations, whose row counts
-        are catalog-bounded), or — with ``running=True`` — an ASYNC
-        statement still executing on its worker thread (HS2's
-        SQLOperation pool model, service/cli/operation/
-        SQLOperation.java:71): the handle is born RUNNING, the worker
-        calls finish_with/fail, and clients poll GetOperationStatus."""
+        toLocalIterator, or one collect() if local), a STATIC metadata
+        result (columns + materialized row list — the Get* operations,
+        whose row counts are catalog-bounded), or — with
+        ``running=True`` — an ASYNC statement still executing on its
+        worker thread (HS2's SQLOperation pool model, service/cli/
+        operation/SQLOperation.java:71): the handle is born RUNNING,
+        the worker calls finish_with/fail, clients poll GetOperationStatus."""
         self.secret = secret  # validated on every operation RPC
         self.df = df
+        self.local = False  # rows already in driver memory (finish_with)
         if running:
             self.columns: list[tuple[str, str]] = [("result", "string")]
             self.rows: Optional[Iterator] = None
             self.state = OP_RUNNING
         elif df is not None:
-            self.columns = [
-                (f.name, f.dataType.simpleString()) for f in df.schema.fields
-            ] or [("result", "string")]
-            self.rows = None
-            self.state = OP_FINISHED
+            self.finish_with(df)
         else:
             self.columns = columns or [("result", "string")]
             self.rows = iter(rows or [])
@@ -441,11 +440,29 @@ class _Operation:
 
     def iterator(self) -> Iterator:
         if self.rows is None:
-            self.rows = iter(self.df.toLocalIterator())
+            # a local result sits in driver memory: collect() needs no
+            # job, toLocalIterator runs one per partition
+            self.rows = iter(self.df.collect() if self.local
+                             else self.df.toLocalIterator())
         return self.rows
 
+    def unservable(self) -> Optional[str]:
+        """Why there is no result set to describe or fetch, else None
+        (caller holds self.lock): placeholder columns must not pose as
+        a schema while RUNNING, after ERROR (serve the failure, review
+        r13 pass 3) or when canceled while RUNNING (pass 6)."""
+        if self.state == OP_RUNNING:
+            return "operation is still running"
+        if self.state == OP_ERROR:
+            return self.error or "operation failed"
+        if self.state == OP_CANCELED and self.df is None and self.rows is None:
+            return "operation was canceled"
+        return None
+
     def finish_with(self, df) -> None:
-        """Async worker completion — caller holds self.lock."""
+        """Publish a result (async workers hold self.lock). ``local``
+        precedes ``df``: FetchResults reads both lock-free."""
+        self.local = df.isLocal()
         self.df = df
         self.columns = [
             (f.name, f.dataType.simpleString()) for f in df.schema.fields
@@ -933,22 +950,9 @@ class TCLIFront:
         except KeyError as e:
             return [(1, T_STRUCT, _status_error(str(e)))]
         with op.lock:
-            if op.state == OP_RUNNING:
-                # an async statement's schema is unknown until the
-                # worker finishes — the placeholder columns must not
-                # masquerade as a result-set shape
-                return [(1, T_STRUCT, _status_error(
-                    "operation is still running"))]
-            if op.state == OP_ERROR:
-                # same masquerade for a FAILED async statement: serve
-                # the failure, not the placeholder (review r13 pass 3)
-                return [(1, T_STRUCT, _status_error(
-                    op.error or "operation failed"))]
-            if op.state == OP_CANCELED and op.df is None and \
-                    op.rows is None:
-                # canceled while RUNNING: no schema ever existed
-                return [(1, T_STRUCT, _status_error(
-                    "operation was canceled"))]
+            why = op.unservable()
+        if why:
+            return [(1, T_STRUCT, _status_error(why))]
         descs = []
         for pos, (cname, dtype) in enumerate(op.columns, start=1):
             base = _base_dtype(dtype)
@@ -998,34 +1002,18 @@ class TCLIFront:
         # acquisition and a later tag would cancel an empty group and
         # then block behind this fetch for the whole batch), cleared
         # after (pooled JVM threads, review r13 pass 3). Static
-        # metadata ops page a materialized Python list — no Spark
-        # jobs, no tag, no 4 py4j round trips per Get* fetch (pass 6).
-        tagged = op.df is not None
+        # metadata ops and local results page rows already in memory —
+        # no Spark jobs, no tag, no 4 py4j round trips per fetch (pass 6).
+        tagged = op.df is not None and not op.local
         if tagged:
             self._tag_job_group(sess.engine.spark, guid, f"fetch {n} rows")
         try:
             with op.lock:
-                if op.state == OP_RUNNING:
-                    # an async statement still executing has no rows
-                    # to serve; well-behaved clients poll
-                    # GetOperationStatus first (beeline's
-                    # waitForOperationToComplete)
-                    return [(1, T_STRUCT, _status_error(
-                        "operation is still running"))]
-                if op.state == OP_ERROR:
-                    return [(1, T_STRUCT, _status_error(
-                        op.error or "operation failed"))]
-                if op.state == OP_CANCELED:
-                    if op.df is None and op.rows is None:
-                        # canceled while RUNNING: no schema ever
-                        # existed — refuse like GetResultSetMetadata
-                        # does, instead of inventing a placeholder
-                        # 'result' column (review r13 pass 6)
-                        return [(1, T_STRUCT, _status_error(
-                            "operation was canceled"))]
-                    batch: list = []
-                else:
-                    batch = list(itertools.islice(op.iterator(), n))
+                why = op.unservable()
+                if why:
+                    return [(1, T_STRUCT, _status_error(why))]
+                batch = [] if op.state == OP_CANCELED else \
+                    list(itertools.islice(op.iterator(), n))
         finally:
             if tagged:
                 self._clear_job_group(sess.engine.spark)

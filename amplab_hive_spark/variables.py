@@ -46,6 +46,10 @@ from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
 
+from amplab_hive_spark.session import local_result
+
+_SET_SCHEMA = "key string, value string"  # Spark's native SET result
+
 # SystemVariables.java:30 — no '}', '$' or space inside the braces.
 VARPAT = re.compile(r"\$\{[^}$ ]+\}")
 
@@ -193,8 +197,7 @@ class VariableRegistry:
             )
             if not extras:
                 return base
-            return base.union(
-                spark.createDataFrame(extras, base.schema))
+            return base.union(local_result(spark, extras, base.schema))
         m = _SET_STMT.match(stripped)
         if not m:
             return None
@@ -220,7 +223,7 @@ class VariableRegistry:
             # (SetProcessor.getVariable)
             val = self._get_substitute(spark, name)
             shown = val if val is not None else "<undefined>"
-            return _kv_result(spark, name, shown)
+            return local_result(spark, [(name, shown)], _SET_SCHEMA)
         value = value.strip()
         if name.startswith(ENV_PREFIX):
             # SetProcessor.java:122: env:* variables can not be set
@@ -247,12 +250,7 @@ class VariableRegistry:
 
             guard_prefixed_conf_set(spark, key)
             spark.conf.set(key, value)
-        return _kv_result(spark, name, value)
-
-
-def _kv_result(spark: SparkSession, key: str, value: str) -> DataFrame:
-    """Spark's native SET result schema: (key string, value string)."""
-    return spark.createDataFrame([(key, value)], "key string, value string")
+        return local_result(spark, [(name, value)], _SET_SCHEMA)
 
 
 def parse_kv_flags(pairs: list[str], flag: str) -> dict[str, str]:

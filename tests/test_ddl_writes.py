@@ -226,6 +226,28 @@ def test_update_rejects_partition_column_assignment(spark, sf_dir, wh):
     spark.sql("DROP TABLE IF EXISTS nation_part_guard")
 
 
+def test_partition_columns_follow_shadowing_temp_view(spark, sf_dir, wh):
+    """A temp view that shadows a persistent partitioned table answers
+    for the bare name, as in spark.catalog.listColumns: it has no
+    partition columns. The job-free catalog read must not report the
+    hidden table's; the qualified name still reaches the table."""
+    t = tables(spark, sf_dir)
+    ddl.create_table_as(
+        spark, "nation_part_shadow", t.nation, f"{wh}/nation_part_shadow",
+        partition_by=["n_regionkey"],
+    )
+    try:
+        assert ddl._partition_columns(spark, "nation_part_shadow") == \
+            ["n_regionkey"]
+        t.nation.createOrReplaceTempView("nation_part_shadow")
+        assert ddl._partition_columns(spark, "nation_part_shadow") == []
+        assert ddl._partition_columns(
+            spark, "default.nation_part_shadow") == ["n_regionkey"]
+    finally:
+        spark.catalog.dropTempView("nation_part_shadow")
+        spark.sql("DROP TABLE IF EXISTS nation_part_shadow")
+
+
 def test_delete_drops_emptied_date_partition(spark, sf_dir, wh):
     """DROP PARTITION literal rendering must survive DATE partition
     values (the day-partitioned case the docstring advertises)."""

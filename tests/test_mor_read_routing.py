@@ -370,6 +370,42 @@ def test_auto_publish_skips_corrupt_table(spark, engine, mor_table, tmp_path):
         spark.sql(f"DROP TABLE IF EXISTS {bad}")
 
 
+def test_auto_publish_skips_table_whose_later_delta_is_corrupt(
+    spark, engine, mor_table, tmp_path
+):
+    """The corrupt-delta probe reads EVERY live delta file's footer: a
+    table whose first delta is sound but whose last one is corrupt is
+    still skipped (a single-footer probe read only the first)."""
+    engine.sql(f"UPDATE {mor_table} SET v = v + 1 WHERE k = 1")
+    bad = "mor_corrupt_later_t"
+    spark.sql(f"DROP TABLE IF EXISTS {bad}")
+    spark.sql(
+        f"CREATE TABLE {bad} (k INT, v INT) USING parquet "
+        f"LOCATION '{tmp_path}/{bad}' "
+        f"TBLPROPERTIES ('transactional'='true', 'merge_keys'='k')"
+    )
+    spark.sql(f"INSERT INTO {bad} VALUES (1, 10), (2, 20)")
+    engine.sql(f"UPDATE {bad} SET v = 11 WHERE k = 1")
+    engine.sql(f"UPDATE {bad} SET v = 21 WHERE k = 2")
+    import pyarrow.parquet as pq
+
+    deltas = acid._scan_deltas(acid._delta_path(spark, bad))
+    first, last = (pq.ParquetDataset(d[2]).files
+                   for d in (deltas[0], deltas[-1]))
+    assert last and not set(last) & set(first)  # two distinct deltas
+    for f in last:
+        with open(f, "wb") as fh:
+            fh.write(b"not a parquet file")
+    try:
+        published = acid.auto_publish_mor_views(spark)
+        assert mor_table in published
+        assert bad not in published
+        assert bad not in acid._PUBLISHED
+    finally:
+        acid.unpublish_mor_views(spark, [mor_table])
+        spark.sql(f"DROP TABLE IF EXISTS {bad}")
+
+
 def test_auto_publish_keeps_prior_registration_on_sync_error(
     engine, spark, mor_table, monkeypatch
 ):
